@@ -21,7 +21,13 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    // parsed up front: the value goes unquoted into the JSON lines
+    // below, so a non-integer such as `*` must fail here, not print
+    // invalid JSON
+    val cpusEnv = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = cpusEnv.toIntOption.filter(_ > 0).getOrElse(
+      throw new IllegalArgumentException(
+        s"SPARK_GRAFT_CPUS must be a positive integer, got '$cpusEnv'"))
     val runs = sys.env.getOrElse("SPARK_GRAFT_RUNS", "3").toInt.max(1)
     val spark = GraftSession.tune(
       SparkSession.builder()

@@ -1,6 +1,5 @@
 package graft.functions
 
-import java.io.ByteArrayOutputStream
 import java.math.{BigDecimal => JBigDecimal, MathContext, RoundingMode}
 
 import org.apache.spark.sql.catalyst.InternalRow
@@ -58,14 +57,53 @@ case class EnvelopeJson(child: Expression) extends UnaryExpression {
     copy(child = newChild)
 }
 
+/** Growable byte buffer for the encoder. Unlike
+  * `java.io.ByteArrayOutputStream`, whose `write` is `synchronized`,
+  * nothing here takes a lock; the encoder writes one byte at a time,
+  * so a monitor per byte made the cost of a row grow with its size.
+  * Not thread-safe: each thread keeps its own instance. */
+final class JsonBuf(initialCapacity: Int) {
+  private var buf = new Array[Byte](initialCapacity)
+  private var len = 0
+
+  private def ensure(extra: Int): Unit =
+    if (len + extra > buf.length)
+      buf = java.util.Arrays.copyOf(buf, math.max(buf.length * 2, len + extra))
+
+  def write(b: Int): Unit = {
+    ensure(1)
+    buf(len) = b.toByte
+    len += 1
+  }
+
+  def write(src: Array[Byte], off: Int, n: Int): Unit = {
+    ensure(n)
+    System.arraycopy(src, off, buf, len, n)
+    len += n
+  }
+
+  /** Appends a string known to be ASCII (keys, numbers, base64). */
+  def ascii(s: String): Unit = {
+    val n = s.length
+    ensure(n)
+    var i = 0
+    while (i < n) { buf(len + i) = s.charAt(i).toByte; i += 1 }
+    len += n
+  }
+
+  /** Empties the buffer and keeps its capacity. */
+  def reset(): Unit = len = 0
+
+  def toByteArray: Array[Byte] = java.util.Arrays.copyOf(buf, len)
+}
+
 object EnvelopeJsonWriter {
 
   // per-task-thread reusable buffer: reset() keeps capacity, so the
-  // steady state is zero buffer allocation per row (the encoder runs
-  // 1.5M times per 500k events in q14)
-  private val buffer = new ThreadLocal[ByteArrayOutputStream] {
-    override def initialValue(): ByteArrayOutputStream =
-      new ByteArrayOutputStream(512)
+  // steady state allocates only the output copy per row (the encoder
+  // runs 1.5M times per 500k events in q14)
+  private val buffer = new ThreadLocal[JsonBuf] {
+    override def initialValue(): JsonBuf = new JsonBuf(512)
   }
 
   def encode(row: InternalRow): UTF8String = {
@@ -77,7 +115,7 @@ object EnvelopeJsonWriter {
 
   // --- structural writers (field indices match EnvelopeSchema) -------
 
-  private def writeEnvelope(out: ByteArrayOutputStream, r: InternalRow): Unit = {
+  private def writeEnvelope(out: JsonBuf, r: InternalRow): Unit = {
     out.write('{')
     var first = true
     first = strField(out, r, 0, "origin", first)
@@ -121,7 +159,7 @@ object EnvelopeJsonWriter {
     out.write('}')
   }
 
-  private def writeHttpStartStop(out: ByteArrayOutputStream, r: InternalRow): Unit = {
+  private def writeHttpStartStop(out: JsonBuf, r: InternalRow): Unit = {
     out.write('{')
     var first = true
     first = longField(out, r, 0, "startTimestamp", first)
@@ -147,7 +185,7 @@ object EnvelopeJsonWriter {
     out.write('}')
   }
 
-  private def writeLogMessage(out: ByteArrayOutputStream, r: InternalRow): Unit = {
+  private def writeLogMessage(out: JsonBuf, r: InternalRow): Unit = {
     out.write('{')
     var first = true
     if (!r.isNullAt(0)) {
@@ -155,7 +193,7 @@ object EnvelopeJsonWriter {
       if (b.length > 0) {
         first = key(out, "message", first)
         out.write('"')
-        ascii(out, java.util.Base64.getEncoder.encodeToString(b))
+        out.ascii(java.util.Base64.getEncoder.encodeToString(b))
         out.write('"')
       }
     }
@@ -167,7 +205,7 @@ object EnvelopeJsonWriter {
     out.write('}')
   }
 
-  private def writeValueMetric(out: ByteArrayOutputStream, r: InternalRow): Unit = {
+  private def writeValueMetric(out: JsonBuf, r: InternalRow): Unit = {
     out.write('{')
     var first = true
     first = strField(out, r, 0, "name", first)
@@ -176,7 +214,7 @@ object EnvelopeJsonWriter {
     out.write('}')
   }
 
-  private def writeCounterEvent(out: ByteArrayOutputStream, r: InternalRow): Unit = {
+  private def writeCounterEvent(out: JsonBuf, r: InternalRow): Unit = {
     out.write('{')
     var first = true
     first = strField(out, r, 0, "name", first)
@@ -185,7 +223,7 @@ object EnvelopeJsonWriter {
     out.write('}')
   }
 
-  private def writeError(out: ByteArrayOutputStream, r: InternalRow): Unit = {
+  private def writeError(out: JsonBuf, r: InternalRow): Unit = {
     out.write('{')
     var first = true
     first = strField(out, r, 0, "source", first)
@@ -194,7 +232,7 @@ object EnvelopeJsonWriter {
     out.write('}')
   }
 
-  private def writeContainerMetric(out: ByteArrayOutputStream, r: InternalRow): Unit = {
+  private def writeContainerMetric(out: JsonBuf, r: InternalRow): Unit = {
     out.write('{')
     var first = true
     first = strField(out, r, 0, "applicationId", first)
@@ -207,7 +245,7 @@ object EnvelopeJsonWriter {
     out.write('}')
   }
 
-  private def writeUuid(out: ByteArrayOutputStream, r: InternalRow): Unit = {
+  private def writeUuid(out: JsonBuf, r: InternalRow): Unit = {
     // UUID stays {"low":…,"high":…} with unsigned rendering — never the
     // dashed string (kafka_test.go:572).
     out.write('{')
@@ -217,7 +255,7 @@ object EnvelopeJsonWriter {
     out.write('}')
   }
 
-  private def writeTags(out: ByteArrayOutputStream, m: MapData): Unit = {
+  private def writeTags(out: JsonBuf, m: MapData): Unit = {
     // Go map iteration is randomized; we emit in the map column's
     // storage order (deterministic in Spark) — documented divergence.
     out.write('{')
@@ -234,7 +272,7 @@ object EnvelopeJsonWriter {
     out.write('}')
   }
 
-  private def writeStringArray(out: ByteArrayOutputStream, a: ArrayData): Unit = {
+  private def writeStringArray(out: JsonBuf, a: ArrayData): Unit = {
     out.write('[')
     var i = 0
     while (i < a.numElements()) {
@@ -247,48 +285,43 @@ object EnvelopeJsonWriter {
 
   // --- field helpers -------------------------------------------------
 
-  private def key(out: ByteArrayOutputStream, name: String, first: Boolean): Boolean = {
+  private def key(out: JsonBuf, name: String, first: Boolean): Boolean = {
     if (!first) out.write(',')
     out.write('"')
-    ascii(out, name)
+    out.ascii(name)
     out.write('"')
     out.write(':')
     false
   }
 
-  private def strField(out: ByteArrayOutputStream, r: InternalRow, i: Int,
+  private def strField(out: JsonBuf, r: InternalRow, i: Int,
       name: String, first: Boolean): Boolean =
     if (r.isNullAt(i)) first
     else { val f = key(out, name, first); writeString(out, r.getUTF8String(i)); f }
 
-  private def intField(out: ByteArrayOutputStream, r: InternalRow, i: Int,
+  private def intField(out: JsonBuf, r: InternalRow, i: Int,
       name: String, first: Boolean): Boolean =
     if (r.isNullAt(i)) first
-    else { val f = key(out, name, first); ascii(out, String.valueOf(r.getInt(i))); f }
+    else { val f = key(out, name, first); out.ascii(String.valueOf(r.getInt(i))); f }
 
-  private def longField(out: ByteArrayOutputStream, r: InternalRow, i: Int,
+  private def longField(out: JsonBuf, r: InternalRow, i: Int,
       name: String, first: Boolean): Boolean =
     if (r.isNullAt(i)) first
-    else { val f = key(out, name, first); ascii(out, String.valueOf(r.getLong(i))); f }
+    else { val f = key(out, name, first); out.ascii(String.valueOf(r.getLong(i))); f }
 
-  private def ulongField(out: ByteArrayOutputStream, r: InternalRow, i: Int,
+  private def ulongField(out: JsonBuf, r: InternalRow, i: Int,
       name: String, first: Boolean): Boolean =
     if (r.isNullAt(i)) first
     else {
       val f = key(out, name, first)
-      ascii(out, java.lang.Long.toUnsignedString(r.getLong(i)))
+      out.ascii(java.lang.Long.toUnsignedString(r.getLong(i)))
       f
     }
 
-  private def doubleField(out: ByteArrayOutputStream, r: InternalRow, i: Int,
+  private def doubleField(out: JsonBuf, r: InternalRow, i: Int,
       name: String, first: Boolean): Boolean =
     if (r.isNullAt(i)) first
-    else { val f = key(out, name, first); ascii(out, goFloat(r.getDouble(i))); f }
-
-  private def ascii(out: ByteArrayOutputStream, s: String): Unit = {
-    var i = 0
-    while (i < s.length) { out.write(s.charAt(i)); i += 1 }
-  }
+    else { val f = key(out, name, first); out.ascii(goFloat(r.getDouble(i))); f }
 
   // --- Go-compatible float formatting --------------------------------
 
@@ -359,7 +392,7 @@ object EnvelopeJsonWriter {
     * escaping on (the encoder uses default flags): `"` `\` ctrl chars,
     * `<` `>` `&` → \u00XX, U+2028/29 →  / , invalid UTF-8
     * byte → literal `�` escape. Valid multi-byte runs copied raw. */
-  def writeString(out: ByteArrayOutputStream, s: UTF8String): Unit = {
+  def writeString(out: JsonBuf, s: UTF8String): Unit = {
     val bytes = s.getBytes
     out.write('"')
     var i = 0
@@ -384,12 +417,12 @@ object EnvelopeJsonWriter {
         val width = utf8Width(bytes, i)
         if (width < 0) {
           // broken UTF-8: one replacement escape per bad byte
-          ascii(out, "\\ufffd")
+          out.ascii("\\ufffd")
           i += 1
         } else if (width == 3 && b == 0xe2 && (bytes(i + 1) & 0xff) == 0x80 &&
             ((bytes(i + 2) & 0xff) == 0xa8 || (bytes(i + 2) & 0xff) == 0xa9)) {
           // U+2028 / U+2029 (JSONP hazard)
-          ascii(out, "\\u202")
+          out.ascii("\\u202")
           out.write(HEX((bytes(i + 2) & 0xff) & 0xf))
           i += 3
         } else {

@@ -335,7 +335,17 @@ object NozzlePipeline {
   /** Kafka-sink fault handling (O9/O10): per record, bounded retry up
     * to `repartitionMax` (kafka.go:230-275, default 5); exhausted
     * records land in the DLQ path with `publish_fail` accounting
-    * instead of being silently dropped. */
+    * instead of being silently dropped.
+    *
+    * Each micro-batch is one Spark job: a single pass publishes every
+    * row and returns, per partition, its ok count and the rows that
+    * used up their retries. The batch function adds both to [[Stats]]
+    * before it returns, and writes the failed rows (`event_id, topic,
+    * payload`) to `dlqPath` as parquet only when there are any.
+    * The failed rows travel back with the job result, so they are
+    * bounded by one micro-batch (one source file, or `rowsPerBatch`
+    * frames). Delivery is at-least-once: a retried task publishes its
+    * partition's rows again. */
   def startDlq(
       routed: DataFrame,
       checkpoint: String,
@@ -349,31 +359,29 @@ object NozzlePipeline {
       .foreachBatch { (batch: Dataset[Row], _: Long) =>
         val spark = batch.sparkSession
         import spark.implicits._
-        val attempts = batch.select("event_id", "topic", "payload")
+        val parts = batch.select("event_id", "topic", "payload")
           .as[(Long, String, String)]
           .mapPartitions { it =>
-            it.map { case (id, topic, payload) =>
+            var okN = 0L
+            val failed = Vector.newBuilder[(Long, String, String)]
+            it.foreach { case row @ (_, topic, payload) =>
               var attempt = 0
               var ok = false
               while (!ok && attempt <= repartitionMax) {
                 try { publisher.publish(topic, payload); ok = true }
                 catch { case _: Exception => attempt += 1 }
               }
-              (id, topic, payload, ok)
+              if (ok) okN += 1 else failed += row
             }
+            Iterator.single((okN, failed.result()))
           }
-          .toDF("event_id", "topic", "payload", "ok")
-          .cache()
-        try {
-          val okN = attempts.filter(col("ok")).count()
-          val failed = attempts.filter(!col("ok"))
-          val failN = failed.count()
-          if (failN > 0)
-            failed.drop("ok").write.mode("append").parquet(dlqPath)
-          stats.publish.addAndGet(okN)
-          stats.publishFail.addAndGet(failN)
-          ()
-        } finally attempts.unpersist()
+          .collect()
+        val failed = parts.flatMap(_._2).toSeq
+        if (failed.nonEmpty)
+          failed.toDF("event_id", "topic", "payload")
+            .write.mode("append").parquet(dlqPath)
+        stats.publish.addAndGet(parts.map(_._1).sum)
+        stats.publishFail.addAndGet(failed.size)
         ()
       }
       .start()

@@ -1,12 +1,14 @@
 package graft
 
-import java.io.ByteArrayOutputStream
+import java.util.concurrent.{Callable, CountDownLatch, Executors}
 
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.functions.{EnvelopeJsonWriter, UuidStr}
+import graft.functions.{EnvelopeJsonWriter, JsonBuf, UuidStr}
 import graft.model._
 
 /** Golden byte-exact tests for the canonical Envelope JSON encoder.
@@ -30,6 +32,15 @@ class EnvelopeJsonSpec extends AnyFunSuite {
       app_id = Some(testAppId), source_type = Some("DEA"),
       source_instance = None)))
 
+  private def logMessageJson(base64: String): String =
+    s"""{"origin":"fake-origin-1","eventType":5,"timestamp":$ts,"logMessage":{"message":"$base64","message_type":1,"timestamp":1461318380946558204,"app_id":"$testAppId","source_type":"DEA"}}"""
+
+  /** Catalyst rows of `envs`, for calling the encoder directly. */
+  private def rows(envs: Seq[Envelope]): Seq[InternalRow] = {
+    val ser = ExpressionEncoder[Envelope]().createSerializer()
+    envs.map(e => ser(e).copy())
+  }
+
   private def encodeAll(envs: Seq[Envelope]): Seq[String] = {
     val spark = SparkTestSession.spark
     import spark.implicits._
@@ -49,8 +60,7 @@ class EnvelopeJsonSpec extends AnyFunSuite {
   test("golden: all six event types byte-exact") {
     val (low, high) = UuidStr.parse(testAppId)
     val cases: Seq[(Envelope, String)] = Seq(
-      logMessageEnv ->
-        s"""{"origin":"fake-origin-1","eventType":5,"timestamp":$ts,"logMessage":{"message":"aGVsbG8=","message_type":1,"timestamp":1461318380946558204,"app_id":"$testAppId","source_type":"DEA"}}""",
+      logMessageEnv -> logMessageJson("aGVsbG8="),
       empty.copy(origin = Some("fake-origin-6"), eventType = Some(4), timestamp = Some(ts),
         httpStartStop = Some(HttpStartStop(None, None, None, None, None, None, None,
           None, None, None, Some(Uuid(low, high)), None, None, None))) ->
@@ -139,7 +149,7 @@ class EnvelopeJsonSpec extends AnyFunSuite {
 
   test("string escaping matches easyjson (HTML escapes on)") {
     def esc(s: String): String = {
-      val out = new ByteArrayOutputStream()
+      val out = new JsonBuf(16)
       EnvelopeJsonWriter.writeString(out, UTF8String.fromString(s))
       new String(out.toByteArray, "UTF-8")
     }
@@ -151,10 +161,45 @@ class EnvelopeJsonSpec extends AnyFunSuite {
     assert(esc("café 日本") === "\"café 日本\"") // valid UTF-8 raw
     assert(esc("\u2028\u2029") === "\"\\u2028\\u2029\"")
     // broken UTF-8: each invalid byte becomes a � escape
-    val out = new ByteArrayOutputStream()
+    val out = new JsonBuf(16)
     EnvelopeJsonWriter.writeString(out,
       UTF8String.fromBytes(Array[Byte]('a', 0xff.toByte, 0xc3.toByte, 'b')))
     assert(new String(out.toByteArray, "UTF-8") === "\"a\\ufffd\\ufffdb\"")
+  }
+
+  test("encoder buffer grows past 100 KB and carries no bytes over after reset") {
+    val body = Array.tabulate(100 * 1024)(i => (i * 31 % 251).toByte)
+    val big = logMessageEnv.copy(
+      logMessage = logMessageEnv.logMessage.map(_.copy(message = Some(body))))
+    val tiny = empty.copy(origin = Some("o"), eventType = Some(-1))
+    val Seq(bigRow, tinyRow) = rows(Seq(big, tiny))
+    // same thread, so the same reused buffer for both rows
+    assert(EnvelopeJsonWriter.encode(bigRow).toString ===
+      logMessageJson(java.util.Base64.getEncoder.encodeToString(body)))
+    assert(EnvelopeJsonWriter.encode(tinyRow).toString ===
+      """{"origin":"o","eventType":-1}""")
+  }
+
+  test("4 threads encoding at once match a sequential encode") {
+    val gen = new EnvelopeGen(20261017)
+    val rs = rows(Seq.fill(300)(gen.envelope()))
+    val want = rs.map(EnvelopeJsonWriter.encode)
+    val pool = Executors.newFixedThreadPool(4)
+    val go = new CountDownLatch(1)
+    try {
+      val results = (1 to 4).map { _ =>
+        pool.submit(new Callable[Seq[UTF8String]] {
+          override def call(): Seq[UTF8String] = {
+            go.await()
+            (1 to 20).flatMap(_ => rs.map(EnvelopeJsonWriter.encode))
+          }
+        })
+      }
+      go.countDown()
+      results.foreach { f =>
+        f.get().grouped(rs.size).foreach(got => assert(got === want))
+      }
+    } finally pool.shutdown()
   }
 
   test("round-trip: decode(envelope_json(e)) == e; malformed -> NULL (O2)") {

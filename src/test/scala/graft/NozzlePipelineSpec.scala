@@ -2,8 +2,11 @@ package graft
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
 import java.util.concurrent.ConcurrentHashMap
-import java.util.concurrent.atomic.AtomicInteger
+import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -31,6 +34,24 @@ class FlakyPublisher(flaky: Set[String], dead: Set[String], failFirst: Int)
       throw new RuntimeException("transient")
     TestPublishLog.delivered.put(topic + "|" + payload.hashCode, topic)
   }
+}
+
+/** Fails every `n`-th publish call, JVM-wide, and counts calls and
+  * injected failures in statics (tasks run in this JVM under local[*]).
+  * A failed call is retried by the sink, so with `n` > 1 every row is
+  * delivered. */
+object EveryNthFailsLog {
+  val calls = new AtomicLong
+  val injected = new AtomicLong
+  def reset(): Unit = { calls.set(0); injected.set(0) }
+}
+
+class EveryNthFails(n: Long) extends Publisher {
+  override def publish(topic: String, payload: String): Unit =
+    if (EveryNthFailsLog.calls.incrementAndGet() % n == 0) {
+      EveryNthFailsLog.injected.incrementAndGet()
+      throw new RuntimeException("transient")
+    }
 }
 
 class NozzlePipelineSpec extends AnyFunSuite {
@@ -142,6 +163,52 @@ class NozzlePipelineSpec extends AnyFunSuite {
     assert(dlq.count() === views)
     assert(dlq.select("topic").distinct().collect().map(_.getString(0)).toSet
       === Set("metric-topic"))
+  }
+
+  test("sink: one job per micro-batch, no row published twice, stats settled on return") {
+    val srcDir = tmp("nozzle-src4")
+    stageEventsFile(srcDir, "part-0.parquet")
+    stageEventsFile(srcDir, "part-1.parquet")
+    EveryNthFailsLog.reset()
+    val stats = new Stats(0)
+    val statsListener = new NozzlePipeline.Listener(stats)
+    // streaming jobs by "queryId/batchId": Spark tags every job a
+    // streaming query runs with both
+    val jobs = new ConcurrentHashMap[String, AtomicInteger]()
+    val jobListener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("sql.streaming.queryId")))
+          .foreach { q =>
+            jobs.computeIfAbsent(q + "/" + e.properties.getProperty("streaming.sql.batchId"),
+              _ => new AtomicInteger).incrementAndGet()
+          }
+    }
+    spark.streams.addListener(statsListener)
+    spark.sparkContext.addSparkListener(jobListener)
+    try {
+      val routed = NozzlePipeline.build(NozzlePipeline.source(spark, srcDir), cfg)
+      val q = NozzlePipeline.startDlq(routed, tmp("nozzle-ckpt4"),
+        new EveryNthFails(50), repartitionMax = 5, stats, tmp("nozzle-dlq4") + "/dlq")
+      q.awaitTermination()
+
+      val routedN = 2 * Tables.events(spark, sf)
+        .filter(col("event_type").isin("click", "view", "signup", "purchase"))
+        .count()
+      // the sink's own counters are final once the query has returned
+      assert(stats.publishFail.get() === 0)
+      assert(stats.publish.get() + stats.publishFail.get() === routedN)
+      assert(EveryNthFailsLog.injected.get() > 0)
+      assert(EveryNthFailsLog.calls.get() === routedN + EveryNthFailsLog.injected.get())
+      eventually(stats.forwarded.get() === routedN)
+      def perBatch = jobs.asScala.collect {
+        case (k, n) if k.startsWith(q.id.toString + "/") => k -> n.get()
+      }
+      eventually(perBatch.size == 2)
+      perBatch.foreach { case (batch, n) => assert(n === 1, s"jobs of $batch") }
+    } finally {
+      spark.sparkContext.removeSparkListener(jobListener)
+      spark.streams.removeListener(statsListener)
+    }
   }
 
   private def eventually(cond: => Boolean, timeoutMs: Long = 10000): Unit = {
