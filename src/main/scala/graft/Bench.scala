@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Bench harness: runs every SparkEntry query on SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line. Each result is written to the `noop` sink — a
@@ -21,22 +20,10 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // parsed up front: the value goes unquoted into the JSON lines
-    // below, so a non-integer such as `*` must fail here, not print
-    // invalid JSON
-    val cpusEnv = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val cpus = cpusEnv.toIntOption.filter(_ > 0).getOrElse(
-      throw new IllegalArgumentException(
-        s"SPARK_GRAFT_CPUS must be a positive integer, got '$cpusEnv'"))
+    // parsed up front: the value goes unquoted into the JSON lines below
+    val cpus = GraftSession.cpus
     val runs = sys.env.getOrElse("SPARK_GRAFT_RUNS", "3").toInt.max(1)
-    val spark = GraftSession.tune(
-      SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.ui.enabled", "false")
-    ).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftSession(spark)
+    val spark = GraftSession.local(cpus)
     // JIT/codegen warm-up so the first measured query doesn't absorb
     // session initialization (round-1 showed a 14 s first-query skew).
     spark.range(1000000L).selectExpr("sum(id)").write
@@ -47,11 +34,7 @@ object Bench {
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
       .getOrElse(Set.empty[String])
-    // a misspelled name would silently filter to zero queries and the
-    // bench would report an empty success — fail fast instead
-    val unknown = only.diff(SparkEntry.queries.keySet)
-    require(unknown.isEmpty,
-      s"SPARK_GRAFT_ONLY names not in SparkEntry.queries: ${unknown.toSeq.sorted.mkString(", ")}")
+    SparkEntry.requireKnown(only, "SPARK_GRAFT_ONLY names")
     val results = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.isEmpty || only(name) }
       .map { case (name, fn) =>

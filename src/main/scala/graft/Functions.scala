@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.graftshim.Shims
 
-import graft.functions.{EnvelopeJson, EnvelopeProtoDecode, EnvelopeProtoEncode, KmvMins, KmvSketch, MinHashAgg, RollingHash, SortedIntersectCount, UuidStr}
+import graft.functions.{EnvelopeDecode, EnvelopeJson, EnvelopeProtoDecode, EnvelopeProtoEncode, KmvMins, MinHashAgg, RollingHash, SortedIntersectCount, UuidStr}
 
 /** Custom scalar functions (native Catalyst expressions, codegen-able)
   * + their SQL registration. Column-API entry points below; SQL names
@@ -24,7 +24,7 @@ object Functions {
   /** envelope_decode(json): parse canonical Envelope JSON back to the
     * struct; malformed → NULL (DROPMALFORMED, async.go:274-280). */
   def envelope_decode(json: Column): Column =
-    graft.functions.EnvelopeCodec.decode(json)
+    Shims.column(EnvelopeDecode(Shims.expression(json)))
 
   /** envelope_proto(struct): dropsonde protobuf wire encoding of an
     * Envelope (sonde-go field numbers). */
@@ -77,9 +77,10 @@ object Functions {
       org.apache.spark.sql.catalyst.expressions.Literal(spec)))
 
   /** kmv_kth(h, k): k-th minimum distinct hash — the KMV
-    * distinct-count sketch statistic (estimator (k-1)*M/h_k). */
+    * distinct-count sketch statistic (estimator (k-1)*M/h_k); NULL
+    * when the group has fewer than k distinct hashes. */
   def kmv_kth(h: Column, k: Int): Column =
-    Shims.column(KmvSketch(Shims.expression(h), k).toAggregateExpression())
+    Shims.column(kmvKth(Shims.expression(h), k))
 
   /** kmv_mins(h, k): the KMV sketch as a SET — ascending bottom-k
     * distinct hashes, the mergeable state behind the set-operation
@@ -199,15 +200,10 @@ object Functions {
   def gram4_codes(t: Column): Column =
     Shims.column(graft.functions.Gram4Codes(Shims.expression(t)))
 
-  /** word_shingles3(t): sorted distinct 3-word shingles of a
+  /** word_shingles(t, k): sorted distinct k-word shingles of a
     * normalized single-spaced string, sliced zero-copy from the
-    * input — the MinHash/SimHash shingling hot path. */
-  def word_shingles3(t: Column): Column =
-    Shims.column(graft.functions.WordShingles3(Shims.expression(t)))
-
-  /** word_shingles(t, k): the parameterized k-word shingle set —
-    * decontamination's production span widths (k = 8-13) with the
-    * same zero-copy kernel. */
+    * input — the MinHash/SimHash shingling hot path (k = 3) and
+    * decontamination's production span widths (k = 8-13). */
   def word_shingles(t: Column, k: Int): Column =
     Shims.column(graft.functions.WordShinglesK(Shims.expression(t), k))
 
@@ -259,10 +255,10 @@ object Functions {
 
   /** hll_agg(h, b): HyperLogLog registers over the 60-bit md5-prefix
     * hash domain, 2^b-byte mergeable state; returns the exact-integer
-    * register sum S (see [[graft.functions.HllAgg]] — the estimate is
-    * a pure function of S). */
+    * register sum S (see [[graft.functions.HllSketch]] — the estimate
+    * is a pure function of S). */
   def hll_agg(h: Column, b: Int): Column =
-    Shims.column(graft.functions.HllAgg(Shims.expression(h), b)
+    Shims.column(graft.functions.HllRegs(Shims.expression(h), b, sum = true)
       .toAggregateExpression())
 
   /** md5prefix60(bytes): the engine's portable 60-bit hash computed
@@ -286,7 +282,12 @@ object Functions {
     Shims.column(graft.functions.HllUnion(Shims.expression(regs), b)
       .toAggregateExpression())
 
-  import org.apache.spark.sql.catalyst.expressions.Expression
+  import org.apache.spark.sql.catalyst.expressions.{Expression, GetArrayItem, Literal}
+
+  /** The k-th element of the `kmv_mins` bottom-k; the lenient accessor
+    * gives NULL for a group with fewer than k distinct hashes. */
+  private def kmvKth(h: Expression, k: Int): Expression =
+    GetArrayItem(KmvMins(h, k).toAggregateExpression(), Literal(k - 1), failOnError = false)
 
   /** Extract a foldable integer literal argument (k, capacity, bits). */
   private def intLit(fn: String, what: String)(e: Expression): Int =
@@ -325,14 +326,13 @@ object Functions {
   private[graft] val sqlBuilders: Seq[(String, Seq[Expression] => Expression)] = Seq(
     "uuid_str" -> (exprs => UuidStr(exprs(0), exprs(1))),
     "envelope_json" -> (exprs => EnvelopeJson(exprs.head)),
-    "envelope_decode" -> (exprs => graft.functions.EnvelopeDecode(exprs.head)),
+    "envelope_decode" -> (exprs => EnvelopeDecode(exprs.head)),
     "envelope_proto" -> (exprs => EnvelopeProtoEncode(exprs.head)),
     "envelope_proto_decode" -> (exprs => EnvelopeProtoDecode(exprs.head)),
     "sorted_intersect_count" -> (exprs => SortedIntersectCount(exprs(0), exprs(1))),
     "minhash_agg" -> (exprs => MinHashAgg(exprs.head).toAggregateExpression()),
     // kmv_kth(h, 16): k must be a foldable integer literal
-    "kmv_kth" -> (exprs =>
-      KmvSketch(exprs(0), intLit("kmv_kth", "k")(exprs(1))).toAggregateExpression()),
+    "kmv_kth" -> (exprs => kmvKth(exprs(0), intLit("kmv_kth", "k")(exprs(1)))),
     // kmv_mins(h, 64): k must be a foldable integer literal
     "kmv_mins" -> (exprs =>
       KmvMins(exprs(0), intLit("kmv_mins", "k")(exprs(1))).toAggregateExpression()),
@@ -359,7 +359,6 @@ object Functions {
         intLit("pq_adc", "nSub")(exprs(4)))),
     "vec_dot" -> (exprs => graft.functions.VecDot(exprs(0), exprs(1))),
     "gram4_codes" -> (exprs => graft.functions.Gram4Codes(exprs.head)),
-    "word_shingles3" -> (exprs => graft.functions.WordShingles3(exprs.head)),
     // word_shingles(t, 8): k must be a foldable integer literal
     "word_shingles" -> (exprs =>
       graft.functions.WordShinglesK(exprs(0), intLit("word_shingles", "k")(exprs(1)))),
@@ -403,8 +402,8 @@ object Functions {
     "cdc_bounds" -> (exprs => graft.functions.CdcBounds(exprs(0),
       intLit("cdc_bounds", "k")(exprs(1)), intLit("cdc_bounds", "d")(exprs(2)))),
     // hll_agg(h, 6): register-count exponent must be an integer literal
-    "hll_agg" -> (exprs => graft.functions.HllAgg(exprs(0),
-      intLit("hll_agg", "b")(exprs(1))).toAggregateExpression()),
+    "hll_agg" -> (exprs => graft.functions.HllRegs(exprs(0),
+      intLit("hll_agg", "b")(exprs(1)), sum = true).toAggregateExpression()),
     // accepts strings too: the identity/string→binary cast resolves in
     // the analyzer (AbstractDataType is sql-private, so no
     // ImplicitCastInputTypes here)

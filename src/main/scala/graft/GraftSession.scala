@@ -8,8 +8,8 @@ import org.apache.spark.sql.SparkSession
   * scale-oriented defaults are applied uniformly:
   *
   *  - AQE on (runtime re-plan, skew-join splitting at 100 TB);
-  *  - shuffle partitions sized to local cores (the driver overrides via
-  *    its own builder; cluster deploys would size to 2-3x total cores);
+  *  - shuffle partitions sized to local cores ([[cpus]]; cluster
+  *    deploys would size to 2-3x total cores);
   *  - `nanosAsLong` so parquet TIMESTAMP(NANOS) columns (the `events.ts`
   *    column in the testdata) load as raw ns-since-epoch longs — we then
   *    derive micro-precision timestamps explicitly where windowing needs
@@ -25,33 +25,18 @@ object GraftSession {
     .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     .config("spark.sql.parquet.filterPushdown", "true")
     .config("spark.sql.autoBroadcastJoinThreshold", 64 * 1024 * 1024)
-    // Fallback chain SPARK_GRAFT_SHUFFLE -> SPARK_GRAFT_CPUS -> 32:
-    // tune() is applied AFTER the entry points' own builder configs, so
-    // a plain "32" here silently clobbered Bench/Verify's
-    // shuffle.partitions = $SPARK_GRAFT_CPUS (the r15 verdict's config-
-    // ordering bug) and pinned shuffle parallelism at 32 during the
-    // driver's core-scaling runs. Deferring to the cpus env restores
-    // the documented contract without depending on config order.
-    .config("spark.sql.shuffle.partitions",
-      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")))
-    // Scan-split sizing lever: Spark's 128m default gives a 1.3 GB
-    // single-file fact table only ~11 scan partitions — a third of
-    // local[32]'s cores sit idle through every sf10 table scan. The
-    // A/B lever for measuring split size against core count; see
-    // BENCH_NOTES round 14 for the measured decision.
-    .config("spark.sql.files.maxPartitionBytes",
-      sys.env.getOrElse("SPARK_GRAFT_MAX_PARTITION_BYTES", "128m"))
-    // ContextCleaner-starvation A/B lever (BENCH_NOTES round 14): the
-    // hypothesis was that GC-driven broadcast/shuffle cleanup starves
-    // on a large heap and inflates long sweeps. MEASURED at sf1, full
-    // 259-query sweep: forcing 1min periodic GC is a 1.08× net LOSS
-    // (795.6 s vs 739.7 s) — the r13 in-suite spikes were execution-
-    // memory pressure from repeated pair-kernel+CC recomputes, fixed
-    // by DedupArtifacts, not cleaner debt. Default stays at Spark's
-    // 30min; the env var remains for re-testing on other heap sizes.
-    .config("spark.cleaner.periodicGC.interval",
-      sys.env.getOrElse("SPARK_GRAFT_PERIODIC_GC", "30min"))
+    // tune() is applied AFTER the entry points' own builder configs,
+    // so this is the value every session gets
+    .config("spark.sql.shuffle.partitions", cpus.toLong)
+
+  /** `SPARK_GRAFT_CPUS` (default 32): the mains' local cores and every
+    * session's shuffle partitions. Must be a positive integer — Bench
+    * writes it unquoted into its JSON lines, so `*` fails here. */
+  def cpus: Int = {
+    val env = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    env.toIntOption.filter(_ > 0).getOrElse(throw new IllegalArgumentException(
+      s"SPARK_GRAFT_CPUS must be a positive integer, got '$env'"))
+  }
 
   def local(cores: Int = 32, appName: String = "graft"): SparkSession = {
     val spark = tune(
@@ -72,12 +57,10 @@ object GraftSession {
     spark.conf.set("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     Functions.register(spark)
-    // native-kernel substitutions (semantics-preserving): the spelled
+    // native-kernel substitution (semantics-preserving): the spelled
     // portable hash fuses to Md5Prefix60 (GraftExtensions installs the
-    // same rule cluster-wide); SPARK_GRAFT_NO_MD5FOLD=1 is the kill
-    // switch (and the A/B lever for measuring the rewrite)
-    if (!sys.env.contains("SPARK_GRAFT_NO_MD5FOLD") &&
-        !spark.experimental.extraOptimizations.contains(graft.plans.Md5PrefixFold))
+    // same rule cluster-wide)
+    if (!spark.experimental.extraOptimizations.contains(graft.plans.Md5PrefixFold))
       spark.experimental.extraOptimizations =
         spark.experimental.extraOptimizations :+ graft.plans.Md5PrefixFold
     spark

@@ -37,6 +37,15 @@ object SparkEntry {
       graft.queries.RelationalQueries.queries ++
       graft.queries.EngineQueries.queries
 
+  /** Fail fast on a query-name selection naming an unknown query: a
+    * misspelled name would otherwise silently select nothing and the
+    * run would report an empty success. */
+  def requireKnown(names: Iterable[String], what: String): Unit = {
+    val unknown = names.toSet.diff(queries.keySet)
+    require(unknown.isEmpty,
+      s"$what not in SparkEntry.queries: ${unknown.toSeq.sorted.mkString(", ")}")
+  }
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =

@@ -10,9 +10,10 @@ import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
 /** `kmv_mins(h, k)` — the KMV sketch as a SET: the k smallest DISTINCT
-  * hash values seen, ascending. Where [[KmvSketch]] (`kmv_kth`) keeps
-  * only the k-th minimum (the distinct-count statistic), the bottom-k
-  * SET supports the set-OPERATION estimators: for two sketches A, B
+  * hash values seen, ascending. Its k-th element is `kmv_kth`, the
+  * distinct-count statistic (estimator `D ≈ (k-1)·M / h_k`, NULL below
+  * k distinct values); the bottom-k SET also supports the
+  * set-OPERATION estimators: for two sketches A, B
   * with the bottom-k of their union U = bottomk(A ∪ B),
   * Jaccard ≈ |U ∩ A ∩ B| / |U| — the classic KMV resemblance
   * estimator (Beyer et al., "On Synopses for Distinct-Value Estimation

@@ -8,8 +8,16 @@ import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** `word_shingles(t, k)` — the sorted distinct k-word shingle set of a
-  * NORMALIZED (trimmed, single-spaced, `[a-z0-9 ]`) string; the
-  * parameterized form of [[WordShingles3]] (which delegates here).
+  * NORMALIZED (trimmed, single-spaced, `[a-z0-9 ]`) string.
+  *
+  * Because the input is single-spaced, every k-word shingle is a
+  * CONTIGUOUS substring of `t` (from word i's first byte to word
+  * i+k-1's last byte), so shingles are built as byte-range slices of
+  * the one input buffer — byte-identical to the
+  * `transform(sequence(...), i -> array_join(slice(words, i, k), ' '))`
+  * HOF chain the DuckDB oracle mirrors (same strings ⇒ same md5-based
+  * minhash domain), without allocating a word array, a lambda frame
+  * per shingle, or an object TimSort per document.
   *
   * `k` is a construction-time literal (like `kmv_kth`'s k): the span
   * width of decontamination and boilerplate detection is an operator

@@ -37,7 +37,7 @@ import graft.ops.Bucketing
 object DedupQueries {
 
   /** doc_id + SORTED distinct 3-word shingle set (docs with ≥3
-    * words). Native `word_shingles3`: shingles are contiguous
+    * words). Native `word_shingles(t, 3)`: shingles are contiguous
     * substrings of the single-spaced normalized text, sliced
     * zero-copy — same strings (hence same md5 minhash domain) as the
     * transform/array_join HOF chain the oracle mirrors, measured
@@ -46,8 +46,8 @@ object DedupQueries {
   private[graft] def shingleSets(s: SparkSession, d: String): DataFrame =
     Tables.documents(s, d)
       .select(col("doc_id"),
-        graft.Functions.word_shingles3(
-          trim(regexp_replace(lower(col("text")), "[^a-z0-9]+", " "))).as("sset"))
+        graft.Functions.word_shingles(
+          trim(regexp_replace(lower(col("text")), "[^a-z0-9]+", " ")), 3).as("sset"))
       .filter(size(col("sset")) >= 1)
 
   // 60-bit md5-derived shingle hashes (15 hex chars → fits BIGINT,
@@ -568,8 +568,8 @@ object DedupQueries {
     "q117_kmv_overlap" -> ((s, d) => {
       val hs = Tables.documents(s, d)
         .select(col("source"),
-          explode(graft.Functions.word_shingles3(
-            trim(regexp_replace(lower(col("text")), "[^a-z0-9]+", " ")))).as("sh"))
+          explode(graft.Functions.word_shingles(
+            trim(regexp_replace(lower(col("text")), "[^a-z0-9]+", " ")), 3)).as("sh"))
         .select(col("source"),
           conv(substring(md5(col("sh")), 1, 15), 16, 10).cast(LongType).as("h"))
       val sk = hs.groupBy("source")
@@ -850,8 +850,8 @@ object DedupQueries {
     "q180_novelty" -> ((s, d) => {
       val sh = graft.ops.Barrier(Tables.documents(s, d)
         .select(col("doc_id"),
-          explode(graft.Functions.word_shingles3(
-            trim(regexp_replace(lower(col("text")), "[^a-z0-9]+", " "))))
+          explode(graft.Functions.word_shingles(
+            trim(regexp_replace(lower(col("text")), "[^a-z0-9]+", " ")), 3))
             .as("g")))
       val df = sh.groupBy("g").agg(count(lit(1)).as("df"))
       sh.join(df, Seq("g"))
@@ -1089,7 +1089,7 @@ object DedupQueries {
     * array (one md5 + 12 mixes per shingle, mins in registers) —
     * no explode/shuffle/group-by/join-back; cross-validated against
     * the streaming minhash_agg aggregate in MinHashAggSpec.
-    * sset arrives sorted from word_shingles3 — no re-sort needed. */
+    * sset arrives sorted from word_shingles — no re-sort needed. */
   /** q245's 128-bit token-bucket bitmap halves — an exact-safe
     * intersection UPPER bound usable as an in-join candidate prune:
     *   inter ≤ min(na − popcount(bma &~ bmb), nb − popcount(bmb &~ bma))
@@ -1319,8 +1319,8 @@ object DedupQueries {
     * hasn't landed in any table yet. */
   private def shingleSetsOf(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"),
-      graft.Functions.word_shingles3(
-        trim(regexp_replace(lower(col("text")), "[^a-z0-9]+", " "))).as("sset"))
+      graft.Functions.word_shingles(
+        trim(regexp_replace(lower(col("text")), "[^a-z0-9]+", " ")), 3).as("sset"))
       .filter(size(col("sset")) >= 1)
 
   /** Banded LSH (doc_id, bkey) rows for a shingle-set relation.

@@ -106,7 +106,7 @@ object TextRetrievalQueries {
     // are MBs), so its distinct shingle set BROADCASTS and the
     // corpus-side probe is map-local — the per-doc shingle explode
     // partial-aggregates before the one (doc_id → count) shuffle.
-    // k=3 here (the native word_shingles3 kernel, shared with q47);
+    // k=3 here (the native word_shingles kernel, shared with q47);
     // production decontam raises k to 8-13 grams — same plan shape,
     // only the span extractor's window width changes.
     "q55_decontam" -> ((s, d) => {

@@ -204,7 +204,7 @@ object TextTokenizerQueries {
     }),
     // Cross-document boilerplate spans — the C4-style "same span in
     // multiple documents" detector that feeds span-level scrubbing:
-    // 3-word shingles (the native word_shingles3 set, so a span
+    // 3-word shingles (the native word_shingles(t, 3) set, so a span
     // counts once per doc) aggregated by span with map-side combine,
     // kept where ≥5 distinct docs share the span, top-20 by spread.
     // Scale shape: the only shuffle is the (span → count) partial
@@ -214,7 +214,7 @@ object TextTokenizerQueries {
     "q47_spans" -> ((s, d) => {
       withWords(s, d)
         .select(col("doc_id"),
-          explode(graft.Functions.word_shingles3(col("t"))).as("span"))
+          explode(graft.Functions.word_shingles(col("t"), 3)).as("span"))
         .groupBy("span")
         .agg(count(lit(1)).as("n_docs"))
         .filter(col("n_docs") >= 5)
@@ -240,12 +240,12 @@ object TextTokenizerQueries {
     "q89_boiler_scrub" -> ((s, d) => {
       val freq = withWords(s, d)
         .select(col("doc_id"),
-          explode(graft.Functions.word_shingles3(col("t"))).as("span"))
+          explode(graft.Functions.word_shingles(col("t"), 3)).as("span"))
         .groupBy("span").agg(count(lit(1)).as("n_docs"))
         .filter(col("n_docs") >= 5)
         .select("span")
       // positional 3-word spans (start index i covers words i..i+2);
-      // word_shingles3 is the distinct SET (census-side), so the
+      // word_shingles is the distinct SET (census-side), so the
       // positional stream comes straight off the words array
       val cov = withWords(s, d)
         .select(col("doc_id"), col("words"))

@@ -10,7 +10,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * does not survive. */
 class GraftExtensionsSpec extends AnyFunSuite {
 
-  test("extension-built session resolves graft functions without register()") {
+  /** Run `f` on a session built with `withExtensions` and no
+    * Functions.register call, then restore the shared session. */
+  private def withExtensionSession(f: SparkSession => Unit): Unit = {
     val orig = SparkTestSession.spark // ensure the shared context exists
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
@@ -22,6 +24,24 @@ class GraftExtensionsSpec extends AnyFunSuite {
           .withExtensions(new GraftExtensions))
         .getOrCreate()
       assert(s ne orig, "builder returned the shared session; extensions untested")
+      f(s)
+    } finally {
+      SparkSession.setDefaultSession(orig)
+      SparkSession.setActiveSession(orig)
+    }
+  }
+
+  test("every sqlBuilders name resolves after register() and on an extension-built session") {
+    val names = Functions.sqlBuilders.map(_._1)
+    val spark = SparkTestSession.spark
+    Functions.register(spark)
+    def missing(s: SparkSession): Seq[String] = names.filterNot(n => s.catalog.functionExists(n))
+    assert(missing(spark).isEmpty, "not registered by register()")
+    withExtensionSession(s => assert(missing(s).isEmpty, "not injected by GraftExtensions"))
+  }
+
+  test("extension-built session resolves graft functions without register()") {
+    withExtensionSession { s =>
       val one = s.sql(
         "SELECT uuid_str(CAST(1 AS BIGINT), CAST(2 AS BIGINT)) AS u, " +
           "rolling_hash('abc') AS rh, " +
@@ -52,9 +72,6 @@ class GraftExtensionsSpec extends AnyFunSuite {
       val rows = org.apache.spark.sql.graftshim.Shims.ofRows(s, plan)
         .select("lid", "rid").collect().map(x => (x.getLong(0), x.getLong(1))).toSet
       assert(rows === Set((100L, 900L), (101L, 901L)))
-    } finally {
-      SparkSession.setDefaultSession(orig)
-      SparkSession.setActiveSession(orig)
     }
   }
 }

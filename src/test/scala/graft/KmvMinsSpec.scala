@@ -4,7 +4,8 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** kmv_mins semantics: exact bottom-k distinct under arbitrary
-  * partitioning (merge trees), short-group passthrough, and the q117
+  * partitioning (merge trees), short-group passthrough, kmv_kth as the
+  * k-th element (NULL below k distinct values), and the q117
   * union-sketch Jaccard estimator's agreement with a brute-force
   * driver-side replay of the same estimator.
   */
@@ -12,24 +13,31 @@ class KmvMinsSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   val sf = "/root/testdata/sf0.001"
 
-  private def sketch(xs: Seq[Long], k: Int, parts: Int): Seq[Long] = {
+  /** (kmv_mins, kmv_kth) of one group, both with the same k. */
+  private def sketch(xs: Seq[Long], k: Int, parts: Int): (Seq[Long], Option[Long]) = {
     import spark.implicits._
-    xs.toDF("h").repartition(parts)
-      .agg(Functions.kmv_mins(col("h"), k).as("m"))
-      .collect()(0).getSeq[Long](0)
+    val r = xs.toDF("h").repartition(parts)
+      .agg(Functions.kmv_mins(col("h"), k).as("m"), Functions.kmv_kth(col("h"), k).as("kth"))
+      .collect()(0)
+    (r.getSeq[Long](0), if (r.isNullAt(1)) None else Some(r.getLong(1)))
   }
 
   test("bottom-k distinct, ascending, any partitioning") {
     val rnd = new scala.util.Random(7)
     val xs = Seq.fill(5000)(rnd.nextInt(800).toLong)
     val want = xs.distinct.sorted.take(64)
-    for (parts <- Seq(1, 7, 32))
-      assert(sketch(xs, 64, parts) == want, s"parts=$parts")
+    for (parts <- Seq(1, 7, 32)) {
+      val (mins, kth) = sketch(xs, 64, parts)
+      assert(mins == want, s"parts=$parts")
+      // kmv_kth is the k-th kmv_mins element
+      assert(kth == Some(mins(63)), s"parts=$parts")
+    }
   }
 
   test("group smaller than k returns the full distinct set") {
     val xs = Seq(5L, 3L, 3L, 9L, 5L)
-    assert(sketch(xs, 64, 4) == Seq(3L, 5L, 9L))
+    // no k-th minimum below k distinct values: kmv_kth is NULL
+    assert(sketch(xs, 64, 4) == (Seq(3L, 5L, 9L), None))
   }
 
   test("q117 estimator matches a driver-side replay on real sketches") {
@@ -37,8 +45,8 @@ class KmvMinsSpec extends AnyFunSuite {
     // compute |U ∩ A ∩ B| / |U| by hand and compare to the query.
     val hs = Tables.documents(spark, sf)
       .select(col("source"),
-        explode(Functions.word_shingles3(
-          trim(regexp_replace(lower(col("text")), "[^a-z0-9]+", " ")))).as("sh"))
+        explode(Functions.word_shingles(
+          trim(regexp_replace(lower(col("text")), "[^a-z0-9]+", " ")), 3)).as("sh"))
       .select(col("source"),
         conv(substring(md5(col("sh")), 1, 15), 16, 10).cast("long").as("h"))
     val sk = hs.groupBy("source")

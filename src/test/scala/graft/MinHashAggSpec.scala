@@ -46,8 +46,8 @@ class MinHashAggSpec extends AnyFunSuite {
     val agg = SparkEntry.queries("q32_minhash_sig")(spark, sf)
     val scalar = Tables.documents(spark, sf)
       .select(col("doc_id"),
-        Functions.word_shingles3(
-          trim(regexp_replace(lower(col("text")), "[^a-z0-9]+", " "))).as("sset"))
+        Functions.word_shingles(
+          trim(regexp_replace(lower(col("text")), "[^a-z0-9]+", " ")), 3).as("sset"))
       .filter(size(col("sset")) >= 1)
       .select(col("doc_id"),
         posexplode(Functions.minhash_array(col("sset"))))

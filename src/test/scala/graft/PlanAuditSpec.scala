@@ -845,7 +845,7 @@ class PlanAuditSpec extends AnyFunSuite {
 
   test("hot-path queries contain no interpreted lambda HOFs") {
     // these queries moved from HOF chains to native expressions
-    // (vec_dot, gram4_codes, word_shingles3, simhash60, minhash_array,
+    // (vec_dot, gram4_codes, word_shingles, simhash60, minhash_array,
     // bigram_scores, text_stats) — a lambdafunction in the plan means
     // an interpreted per-element path crept back in
     Seq("q16_topk", "q17_text", "q19_simhash", "q22_ann", "q23_embdup",

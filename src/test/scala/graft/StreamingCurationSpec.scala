@@ -58,7 +58,7 @@ class StreamingCurationSpec extends AnyFunSuite {
     // exact ground truth: distinct shingle overlap with the eval split
     val sh = batchDocs
       .select(col("doc_id"),
-        explode(graft.Functions.word_shingles3(Curation.normText(col("text")))).as("span"))
+        explode(graft.Functions.word_shingles(Curation.normText(col("text")), 3)).as("span"))
     val ev = sh.filter(col("doc_id") % 97 === 0).select("span").distinct()
     val truth = sh.join(ev, "span").select("doc_id").distinct()
       .withColumn("hit", lit(true))
